@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnVector
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Hashing of Spark internal values into the reference's 64-bit item-hash
@@ -73,6 +74,38 @@ private[graft] object SketchHashing {
   }
 
   def supported(dt: DataType): Boolean = hasherFor(dt) != null
+
+  /** Hash of the non-null value at `rowId` of a column vector. A class
+    * rather than a Function2, whose object argument would box the row id and
+    * the hash on every call.
+    */
+  abstract class VectorHasher extends Serializable {
+    def apply(v: ColumnVector, rowId: Int): Long
+  }
+
+  /** Reads a value of type `dt` straight from a column vector and hashes it
+    * exactly as `hasherFor(dt)` hashes the same value, or null for the types
+    * without a direct read (decimal, struct), which go through `hasherFor`.
+    */
+  def vectorHasherFor(dt: DataType): VectorHasher = dt match {
+    case LongType | TimestampType | TimestampNTZType =>
+      (v, i) => WyHash.hashLong(v.getLong(i))
+    case IntegerType | DateType => (v, i) => WyHash.hashLong(v.getInt(i).toLong)
+    case ShortType => (v, i) => WyHash.hashLong(v.getShort(i).toLong)
+    case ByteType => (v, i) => WyHash.hashLong(v.getByte(i).toLong)
+    case BooleanType => (v, i) => WyHash.hashLong(if (v.getBoolean(i)) 1L else 0L)
+    case FloatType =>
+      (v, i) => WyHash.hashLong(java.lang.Float.floatToIntBits(v.getFloat(i)).toLong)
+    case DoubleType =>
+      (v, i) => WyHash.hashLong(java.lang.Double.doubleToLongBits(v.getDouble(i)))
+    case StringType => (v, i) => UnsafeWyHash.hashUTF8(v.getUTF8String(i))
+    case BinaryType =>
+      (v, i) => {
+        val b = v.getBinary(i)
+        WyHash.hash(b, 0, b.length, 0L)
+      }
+    case _ => null
+  }
 }
 
 /** Distinct-count sketch aggregate — the Spark expression of the reference's
@@ -82,10 +115,15 @@ private[graft] object SketchHashing {
   * shuffle-reduce boundary ; `eval` = estimate() (emitEstimate) or the
   * serialized sketch bytes for storage / re-aggregation.
   *
-  * Catalyst plans this as ObjectHashAggregateExec with automatic partial ->
-  * shuffle -> final phases; the buffer crosses the wire via the versioned
-  * sketch format (serialize/deserialize below), sitting exactly where the
-  * reference's serde feature was designed to sit (src/serde.rs:29-80).
+  * Catalyst plans this as partial -> shuffle -> final phases. In a session
+  * with [[SketchAggregation]] installed (every `graft.functions` builder,
+  * `registerAll` and `GraftExtensions` install it) the partial phase is a
+  * [[SketchPartialAggregateExec]] that hashes column values straight into
+  * per-group sketches; otherwise, and for the final phase, it is an
+  * ObjectHashAggregateExec calling `update` / `merge` below. The buffer
+  * crosses the wire via the versioned sketch format (serialize/deserialize
+  * below), sitting exactly where the reference's serde feature was designed
+  * to sit (src/serde.rs:29-80).
   */
 case class CardinalitySketchAgg(
     child: Expression,
@@ -96,7 +134,7 @@ case class CardinalitySketchAgg(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[CardinalitySketch] with UnaryLike[Expression] {
 
-  @transient private lazy val hasher: Any => Long = SketchHashing.hasherFor(child.dataType)
+  @transient private[sql] lazy val hasher: Any => Long = SketchHashing.hasherFor(child.dataType)
 
   override def checkInputDataTypes(): TypeCheckResult = {
     if (p < CardinalitySketch.MinP || p > CardinalitySketch.MaxP) {
@@ -146,7 +184,13 @@ case class CardinalitySketchAgg(
 /** Mutable holder so the union aggregate can adopt (p, w) from the first
   * sketch it sees instead of demanding parameters up front.
   */
-private[graft] final class UnionBuffer(var sk: CardinalitySketch)
+private[graft] final class UnionBuffer(var sk: CardinalitySketch) {
+  /** Adopts the first sketch, merges every later one into it. */
+  def add(other: CardinalitySketch): Unit =
+    if (sk == null) sk = other else if (other != null) sk.merge(other)
+
+  def sizeInBytes: Int = if (sk == null) 0 else sk.sizeInBytes
+}
 
 /** Second-level aggregate over a column of serialized sketches: re-aggregates
   * stored/partial sketches by sketch union — the reference's merge()
@@ -171,16 +215,12 @@ case class CardinalityUnionAgg(
 
   override def update(buffer: UnionBuffer, input: InternalRow): UnionBuffer = {
     val v = child.eval(input)
-    if (v != null) {
-      val sk = CardinalitySketch.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buffer.sk == null) buffer.sk = sk else buffer.sk.merge(sk)
-    }
+    if (v != null) buffer.add(CardinalitySketch.deserialize(v.asInstanceOf[Array[Byte]]))
     buffer
   }
 
   override def merge(buffer: UnionBuffer, other: UnionBuffer): UnionBuffer = {
-    if (buffer.sk == null) buffer.sk = other.sk
-    else if (other.sk != null) buffer.sk.merge(other.sk)
+    buffer.add(other.sk)
     buffer
   }
 

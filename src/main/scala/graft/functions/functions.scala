@@ -23,27 +23,36 @@ object functions {
   private def toCol(e: Expression): Column = ColumnShim.column(e)
   private def ex(c: Column): Expression = ColumnShim.expression(c)
 
+  /** A `ce_*` aggregate column. Installs [[graft.sql.SketchAggregation]] on
+    * the active session, so the aggregate's partial phase runs as a
+    * columnar sketch operator.
+    */
+  private def sketchAgg(e: Expression): Column = {
+    SketchAggregation.installOnActive()
+    toCol(e)
+  }
+
   /** Aggregate: approximate COUNT(DISTINCT col) as a Long. Exact for groups
     * with <= 128 distinct values (Small/Array representations); HLL with
     * LogLog-Beta above, error ~1.04/sqrt(2^p).
     */
   def ce_approx_distinct(col: Column, p: Int = 12, w: Int = 6): Column =
-    toCol(CardinalitySketchAgg(ex(col), p, w, emitEstimate = true).toAggregateExpression())
+    sketchAgg(CardinalitySketchAgg(ex(col), p, w, emitEstimate = true).toAggregateExpression())
 
   /** Aggregate: build a mergeable serialized sketch (BinaryType) of the
     * distinct values of col. Store it, re-aggregate it with ce_merge /
     * ce_merge_estimate, or read it with ce_estimate.
     */
   def ce_sketch(col: Column, p: Int = 12, w: Int = 6): Column =
-    toCol(CardinalitySketchAgg(ex(col), p, w, emitEstimate = false).toAggregateExpression())
+    sketchAgg(CardinalitySketchAgg(ex(col), p, w, emitEstimate = false).toAggregateExpression())
 
   /** Aggregate: union a column of serialized sketches into one sketch. */
   def ce_merge(col: Column): Column =
-    toCol(CardinalityUnionAgg(ex(col), emitEstimate = false).toAggregateExpression())
+    sketchAgg(CardinalityUnionAgg(ex(col), emitEstimate = false).toAggregateExpression())
 
   /** Aggregate: union a column of serialized sketches and return the estimate. */
   def ce_merge_estimate(col: Column): Column =
-    toCol(CardinalityUnionAgg(ex(col), emitEstimate = true).toAggregateExpression())
+    sketchAgg(CardinalityUnionAgg(ex(col), emitEstimate = true).toAggregateExpression())
 
   /** Alias of ce_merge (SURVEY.md §2.3 names this ce_merge_agg). */
   def ce_merge_agg(col: Column): Column = ce_merge(col)
@@ -284,8 +293,10 @@ object functions {
   /** Register the sketch functions for SQL use in an existing session:
     * `graft.functions.registerAll(spark)` then
     * `spark.sql("SELECT lang, ce_approx_distinct(url) FROM pages GROUP BY lang")`.
+    * Also installs [[graft.sql.SketchAggregation]] on the session.
     */
   def registerAll(spark: SparkSession): Unit = {
+    SketchAggregation.install(spark)
     val registry = spark.sessionState.functionRegistry
     sqlBuilders.foreach { case (name, builder) =>
       registry.createOrReplaceTempFunction(name, builder, "built-in")
@@ -295,7 +306,8 @@ object functions {
 
 /** SparkSessionExtensions hook:
   * `--conf spark.sql.extensions=graft.GraftExtensions` makes every sketch
-  * function available in all sessions, and (optionally, behind
+  * function available in all sessions, plans their partial phase with
+  * [[graft.sql.SketchAggregation]], and (optionally, behind
   * `spark.graft.rewriteApproxCountDistinct=true`) rewrites Spark's built-in
   * `approx_count_distinct` to this library's sketch aggregate.
   */
@@ -308,5 +320,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
         (args: Seq[Expression]) => builder(args)))
     }
     ext.injectResolutionRule(graft.plans.RewriteApproxCountDistinct.apply)
+    ext.injectPlannerStrategy(_ => SketchAggregation)
   }
 }

@@ -11,8 +11,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * `approx_count_distinct` (HyperLogLogPlusPlus) to this library's adaptive
   * sketch aggregate. Off by default; enable per session with
   * `spark.graft.rewriteApproxCountDistinct=true`. Existing queries then get
-  * exact answers up to 128 distinct per group and the measured ~10% faster
-  * aggregation, with no code changes.
+  * exact answers up to 128 distinct per group and, through
+  * `graft.sql.SketchAggregation`, the columnar sketch partial aggregate, with
+  * no code changes.
   *
   * relativeSD -> precision via the HLL error model p = ceil(log2((1.04/sd)^2)),
   * clamped to the sketch's [4..18] range.

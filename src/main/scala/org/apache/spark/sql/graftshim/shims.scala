@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.TaskContext
+import org.apache.spark.memory.TaskMemoryManager
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -12,4 +14,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+}
+
+/** The task's memory manager, which Spark exposes only inside its own
+  * packages; the sketch partial aggregate charges its buffers to it.
+  */
+object TaskMemory {
+  def manager(ctx: TaskContext): TaskMemoryManager = ctx.taskMemoryManager()
 }

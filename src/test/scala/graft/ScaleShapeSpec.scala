@@ -71,7 +71,9 @@ class ScaleShapeSpec extends AnyFunSuite {
   test("sort-based fallback path (>128 groups) is bit-identical to hash path") {
     // ObjectHashAggregateExec falls back to sort-based aggregation past
     // spark.sql.objectHashAggregate.sortBased.fallbackThreshold (default 128)
-    // distinct keys per task — a 10k-group aggregation exercises that path.
+    // distinct keys per task. The ce partial (SketchPartialAggregate) has no
+    // such fallback, but the final ObjectHashAggregate still does — a
+    // 10k-group aggregation exercises that path.
     val df = (0 until 200000).map(i => (i % 10000, i.toLong % 37)).toDF("k", "v")
     val got = df.groupBy($"k").agg(ce_approx_distinct($"v").as("d"))
       .agg(sum($"d"), count(lit(1))).collect()(0)

@@ -62,4 +62,30 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(q.collect()(0).getLong(0) == 100L)
     spark.conf.set("spark.graft.rewriteApproxCountDistinct", "false")
   }
+
+  private def plansSketchPartial(q: org.apache.spark.sql.DataFrame): Boolean = {
+    q.collect()
+    q.queryExecution.executedPlan.toString.contains("SketchPartialAggregate")
+  }
+
+  test("SQL plans the partial sketch aggregate: registerAll, extensions, rewrite") {
+    // a fresh session sees the strategy only through registerAll
+    val fresh = graft.SharedSpark.spark.newSession()
+    graft.functions.registerAll(fresh)
+    fresh.range(1000).selectExpr("id % 3 AS g", "id % 90 AS k").createOrReplaceTempView("reg_test")
+    assert(plansSketchPartial(fresh.sql("SELECT g, ce_approx_distinct(k) FROM reg_test GROUP BY g")))
+
+    import spark.implicits._
+    (0 until 1000).map(i => ("g" + (i % 2), i.toLong % 90)).toDF("g", "k")
+      .createOrReplaceTempView("ext_plan_test")
+    assert(plansSketchPartial(spark.sql(
+      "SELECT g, ce_approx_distinct(k), ce_sketch(k) FROM ext_plan_test GROUP BY g")))
+
+    spark.conf.set("spark.graft.rewriteApproxCountDistinct", "true")
+    try {
+      val q = spark.sql("SELECT g, approx_count_distinct(k) AS d FROM ext_plan_test GROUP BY g")
+      assert(plansSketchPartial(q))
+      assert(q.collect().map(_.getLong(1)).toSeq == Seq(45L, 45L))
+    } finally spark.conf.set("spark.graft.rewriteApproxCountDistinct", "false")
+  }
 }
