@@ -84,20 +84,14 @@ private[graft] object SketchHashing {
   }
 
   /** Reads a value of type `dt` straight from a column vector and hashes it
-    * exactly as `hasherFor(dt)` hashes the same value, or null for the types
-    * without a direct read (decimal, struct), which go through `hasherFor`.
+    * exactly as `hasherFor(dt)` hashes the same value, or null for every
+    * other type, which goes through `hasherFor`. Each entry repeats its
+    * `hasherFor` encoding, so only the types SketchAggregationSpec checks
+    * byte for byte against Spark's plan have one.
     */
   def vectorHasherFor(dt: DataType): VectorHasher = dt match {
-    case LongType | TimestampType | TimestampNTZType =>
-      (v, i) => WyHash.hashLong(v.getLong(i))
+    case LongType => (v, i) => WyHash.hashLong(v.getLong(i))
     case IntegerType | DateType => (v, i) => WyHash.hashLong(v.getInt(i).toLong)
-    case ShortType => (v, i) => WyHash.hashLong(v.getShort(i).toLong)
-    case ByteType => (v, i) => WyHash.hashLong(v.getByte(i).toLong)
-    case BooleanType => (v, i) => WyHash.hashLong(if (v.getBoolean(i)) 1L else 0L)
-    case FloatType =>
-      (v, i) => WyHash.hashLong(java.lang.Float.floatToIntBits(v.getFloat(i)).toLong)
-    case DoubleType =>
-      (v, i) => WyHash.hashLong(java.lang.Double.doubleToLongBits(v.getDouble(i)))
     case StringType => (v, i) => UnsafeWyHash.hashUTF8(v.getUTF8String(i))
     case BinaryType =>
       (v, i) => {

@@ -16,21 +16,23 @@ import org.apache.spark.sql.execution.aggregate.{AggUtils, ObjectHashAggregateEx
   * ObjectHashAggregateExec for a [[SketchPartialAggregateExec]] with the same
   * output. The exchange, the final ObjectHashAggregateExec, the wire format
   * and every estimate stay as they are. Anything else (a mixed
-  * `ce + count`, DISTINCT or FILTER, streaming, a plan that Spark would not
-  * make an ObjectHashAggregate partial for) is left to Spark: the strategy
-  * returns Nil.
+  * `ce + count`, DISTINCT or FILTER, a nondeterministic input such as
+  * `rand()`, streaming, a plan that Spark would not make an
+  * ObjectHashAggregate partial for) is left to Spark: the strategy returns
+  * Nil.
   */
 object SketchAggregation extends SparkStrategy {
 
   private def eligible(ae: AggregateExpression): Boolean =
-    !ae.isDistinct && ae.filter.isEmpty && (ae.aggregateFunction match {
+    !ae.isDistinct && ae.filter.isEmpty && ae.deterministic && (ae.aggregateFunction match {
       case _: CardinalitySketchAgg | _: CardinalityUnionAgg => true
       case _ => false
     })
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PhysicalAggregation(grouping, aggs, results, child)
-        if !plan.isStreaming && aggs.nonEmpty && aggs.forall(eligible) =>
+        if !plan.isStreaming && aggs.nonEmpty && aggs.forall(eligible) &&
+          grouping.forall(_.deterministic) =>
       AggUtils.planAggregateWithoutDistinct(grouping, aggs, results, planLater(child)) match {
         case Seq(fin: ObjectHashAggregateExec) => fin.child match {
           case p: ObjectHashAggregateExec if p.aggregateExpressions.forall(_.mode == Partial) =>

@@ -31,9 +31,11 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * is hashed from its column vector straight into the group's sketch.
   * Any other child is read row by row.
   *
-  * Buffers are charged to the task's memory manager. When it refuses more,
-  * the operator emits every group it holds and starts over; the final
-  * aggregate merges the repeated keys, so estimates do not change.
+  * Buffers are charged to the task's memory manager while groups are built.
+  * When it refuses more, the operator emits every group it holds and starts
+  * over; the final aggregate merges the repeated keys, so estimates do not
+  * change. The charge is returned before the first row of each emit, so the
+  * consumer of those rows (a shuffle writer's sorter) can take the memory.
   */
 case class SketchPartialAggregateExec(
     groupingExpressions: Seq[NamedExpression],
@@ -215,7 +217,8 @@ private final class UnionColumn(agg: CardinalityUnionAgg, input: Expression)
 }
 
 /** Charges accounted bytes to the task's memory manager. It cannot spill on
-  * request; the aggregator emits its groups when a charge is refused.
+  * request; the aggregator emits its groups when a charge is refused, and
+  * releases the whole grant before emitting.
   */
 private final class SketchMemory(tmm: TaskMemoryManager, limit: Option[Long])
   extends MemoryConsumer(tmm, MemoryMode.ON_HEAP) {
@@ -389,7 +392,6 @@ private final class SketchPartialAggregator(
     numGroups = 0
     columns.foreach(_.clear())
     accounted = 0L
-    memory.releaseAll()
   }
 
   private def finish(): Unit = {
@@ -399,7 +401,6 @@ private final class SketchPartialAggregator(
     metrics("numInputRows") += inputRows
     metrics("numEarlyEmits") += earlyEmits
     metrics("peakMemory") += peak
-    memory.releaseAll()
   }
 
   /** Output iterator over an input whose `step` consumes one unit (a batch
@@ -419,6 +420,8 @@ private final class SketchPartialAggregator(
         refused = !memory.cover(accounted)
       }
       if (refused) earlyEmits += 1 else exhausted = true
+      // emitting only reads and drops the buffers; hand the grant back first
+      memory.releaseAll()
       // a global aggregate emits one row per task even for empty input
       if (exhausted && keys.isEmpty && numGroups == 0 && outputRows == 0) {
         groupOf(InternalRow.empty)

@@ -277,6 +277,40 @@ class SketchAggregationSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally SketchPartialAggregateExec.budgetForTest = None
   }
 
+  test("the task's memory manager: a full partial hands its grant to the shuffle writer") {
+    // SketchMemoryProbe in a JVM of its own: a 9.6 MB pool, 256 shuffle
+    // partitions, one group per row
+    val rows = 300000L
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .toArray(Array.empty[String]).filter(a => a.startsWith("--add-opens") || a.startsWith("-D"))
+    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-Xmx512m", "-cp", System.getProperty("java.class.path"),
+      SketchMemoryProbe.getClass.getName.stripSuffix("$"), rows.toString)
+    val log = Files.createTempFile("graft_sketch_memory", ".log").toFile
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log).start()
+    val exited = proc.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
+    if (!exited) proc.destroyForcibly()
+    val out = new String(Files.readAllBytes(log.toPath), "UTF-8")
+    assert(exited && proc.exitValue == 0, out)
+    val Array(_, total, emits) = out.linesIterator.filter(_.startsWith("ok ")).toSeq.last.split(" ")
+    assert(total.toLong == rows, out)
+    assert(emits.toLong > 0L, s"the partial never filled its share\n$out")
+  }
+
+  test("nondeterministic values: rejected in the arguments, identical from a projection") {
+    val t = spark.range(0, 1000, 1, 2)
+    // Spark's analyzer refuses them inside the aggregate, so the operator,
+    // which does not initialize Nondeterministic nodes, never sees one there
+    val e = intercept[org.apache.spark.sql.AnalysisException](t.agg(ce_approx_distinct(rand(7))))
+    assert(e.getMessage.contains("AGGREGATE_FUNCTION_WITH_NONDETERMINISTIC_EXPRESSION"))
+    val projected = () => t.select(rand(7).as("r"), monotonically_increasing_id().as("m"),
+      (rand(3) * 5).cast("int").as("k"))
+    sameBytes(projected().agg(ce_approx_distinct($"r"), ce_sketch($"m")))
+    sameBytes(projected().groupBy($"k").agg(ce_sketch($"r"), ce_sketch($"m")))
+    // a nondeterministic grouping key is pulled out into a projection too
+    sameEstimates(t.groupBy((rand(5) * 4).cast("int")).agg(ce_sketch($"id")))
+  }
+
   test("Spread.staticPartitionCount on a non-AQE plan with the node runs no job") {
     withConf("spark.sql.adaptive.enabled" -> "false") {
       val q = spark.read.parquet(dictionaryParquet).groupBy($"s").agg(ce_sketch($"h"))
