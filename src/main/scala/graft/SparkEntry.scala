@@ -232,10 +232,12 @@ object SparkEntry {
         .agg(count(lit(1)).as("kept"), sum(col("doc_id")).as("kept_id_sum"))),
 
     // MinHash-LSH near-dup dedup (not SQL-expressible; rows-only check)
-    "q_dedup_minhash_count" -> ((s, dir) =>
-      graft.ops.Dedup.minHashDedup(
-        read(s, dir, "documents"), "doc_id", "text", threshold = 0.8)
-        .agg(count(lit(1)).as("kept"))),
+    "q_dedup_minhash_count" -> ((s, dir) => {
+      val docs = read(s, dir, "documents")
+      graft.ops.Dedup.dropDominated(docs, "doc_id",
+        graft.ops.Dedup.minHashNearDupPairs(docs, "doc_id", "text", threshold = 0.8))
+        .agg(count(lit(1)).as("kept"))
+    }),
 
     // stored-signature minhash pairs (fingerprint-at-ingest pattern):
     // signatures computed ONCE and round-tripped through parquet, pairs
@@ -268,13 +270,15 @@ object SparkEntry {
         read(s, dir, "documents"), "doc_id", "text", maxHamming = 3)
         .agg(count(lit(1)).as("pairs"))),
 
-    // one-call simhash dedup wrapper (rows-only pin, like the pairs gate)
-    "q_dedup_simhash_count" -> ((s, dir) =>
-      graft.ops.Dedup.simHashDedup(
-        read(s, dir, "documents"), "doc_id", "text", maxHamming = 3)
-        .agg(count(lit(1)).as("kept"))),
+    // one-pass simhash dedup (rows-only pin, like the pairs gate)
+    "q_dedup_simhash_count" -> ((s, dir) => {
+      val docs = read(s, dir, "documents")
+      graft.ops.Dedup.dropDominated(docs, "doc_id",
+        graft.ops.Dedup.simHashNearDupPairs(docs, "doc_id", "text", maxHamming = 3))
+        .agg(count(lit(1)).as("kept"))
+    }),
 
-    // one-call embedding dedup with planted exact clones under ids 2^40+i:
+    // one-pass embedding dedup with planted exact clones under ids 2^40+i:
     // every clone loses to its (smaller-id) original, so the kept count is
     // EXACTLY the original corpus size — an independent SQL oracle, and a
     // silent return-everything regression cannot pass
@@ -282,8 +286,10 @@ object SparkEntry {
       val emb = read(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val planted = emb.filter(col("vec_id") < 5)
         .select((col("vec_id") + lit(1L << 40)).as("vec_id"), col("embedding"))
-      graft.ops.Dedup.embeddingDedup(
-        emb.union(planted), "vec_id", "embedding", dim = 64, threshold = 0.9)
+      val vecs = emb.union(planted)
+      graft.ops.Dedup.dropDominated(vecs, "vec_id",
+        graft.ops.Dedup.embeddingNearDupPairs(vecs, "vec_id", "embedding", dim = 64,
+          threshold = 0.9))
         .agg(count(lit(1)).as("kept"))
     }),
 
@@ -586,11 +592,13 @@ object SparkEntry {
 
     // cluster-aware near-dup dedup: transitive closure of the minhash pairs,
     // keep the minimum id per connected component (chains A~B~C with A!~C
-    // now keep exactly one doc, unlike the one-pass minHashDedup contract)
-    "q_dedup_minhash_transitive" -> ((s, dir) =>
-      graft.ops.Dedup.minHashDedupTransitive(
-        read(s, dir, "documents"), "doc_id", "text", threshold = 0.8)
-        .agg(count(lit(1)).as("kept"))),
+    // now keep exactly one doc, unlike the one-pass dropDominated contract)
+    "q_dedup_minhash_transitive" -> ((s, dir) => {
+      val docs = read(s, dir, "documents")
+      graft.ops.Dedup.keepClusterMinima(docs, "doc_id",
+        graft.ops.Dedup.minHashNearDupPairs(docs, "doc_id", "text", threshold = 0.8))
+        .agg(count(lit(1)).as("kept"))
+    }),
 
     // multimodal REAL audio decode, driven end-to-end: deterministic PCM WAV
     // test cards are encoded per doc_id (real javax.sound write), decoded by

@@ -65,10 +65,6 @@ object Dedup {
       "left_semi")
   }
 
-  /** Exact dedup on selected columns (hash-groupBy semantics). */
-  def exactByColumns(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.dropDuplicates(cols)
-
   /** Exact content dedup for corpora WITHOUT a unique row id: keeps the
     * lexicographically smallest full row per identical `textCol`
     * (deterministic across retries and partitionings, unlike
@@ -130,10 +126,10 @@ object Dedup {
     * (e.g. simhash quarters beyond ~4M docs) can no longer silently read as
     * "no near-duplicates".
     */
-  private def dropOversizedBuckets(banded: DataFrame, bucketCol: String,
-      maxBucketSize: Int, opName: String): DataFrame = {
+  private def dropOversizedBuckets(banded: DataFrame, maxBucketSize: Int,
+      opName: String): DataFrame = {
     val counts = GraftMetrics.observeBucketCap(
-      banded.groupBy(col(bucketCol)).agg(count(lit(1)).as("_bn")),
+      banded.groupBy(col("_bucket")).agg(count(lit(1)).as("_bn")),
       opName, maxBucketSize)
     // DELIVERY CAVEAT (handled in GraftMetrics): two plan shapes never
     // deliver the in-plan metric — empty results under AQE (empty-relation
@@ -149,49 +145,42 @@ object Dedup {
     // truncation would hide.
     val smallBuckets = counts
       .filter(col("_bn") <= maxBucketSize)
-      .select(col(bucketCol))
-    banded.join(smallBuckets, Seq(bucketCol))
+      .select(col("_bucket"))
+    banded.join(smallBuckets, Seq("_bucket"))
   }
 
-  /** Per-doc band keys as narrow `(_band, _id)` rows — the signature is
-    * dropped BEFORE anything shuffles, so band exchanges carry ~16 bytes/row,
-    * then oversized buckets are dropped ([[dropOversizedBuckets]]; the band
-    * exchange is reused by Catalyst for the count, the filter join, and the
-    * self-join).
+  /** The LSH pair core shared by minhash, simhash and embeddings: a banded
+    * `(_bucket, _id, carry...)` frame (one row per doc and bucket key) loses
+    * its oversized buckets ([[dropOversizedBuckets]]), then self-joins on
+    * the bucket and keeps `id_a < id_b`. Each `carry` column rides along as
+    * `<col>_a` / `<col>_b`. Pairs sharing several buckets repeat, one row
+    * per shared bucket. The bucket exchange is reused by Catalyst for the
+    * count, the filter join, and the self-join, so callers keep it narrow:
+    * ids and keys plus at most a few fixed-width bytes (simhash carries its
+    * 8-byte hash), never the text, signature or vector.
     */
-  private def cappedBands(sigs: DataFrame, bands: Int, rowsPerBand: Int,
-      maxBucketSize: Int): DataFrame = {
-    val banded = sigs.select(
-      col("_id"),
-      explode(array((0 until bands).map(b =>
-        minhash_band_key(col("_sig"), b, rowsPerBand)): _*)).as("_band"))
-    dropOversizedBuckets(banded, "_band", maxBucketSize, "minhash")
+  private def bucketPairs(banded: DataFrame, maxBucketSize: Int, opName: String,
+      carry: Seq[String] = Nil): DataFrame = {
+    val capped = dropOversizedBuckets(banded, maxBucketSize, opName)
+    def side(s: String): DataFrame = capped.select(
+      col("_bucket") +: col("_id").as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), Seq("_bucket")).filter(col("id_a") < col("id_b"))
   }
 
-  /** MinHash-LSH candidate pairs: documents sharing >= 1 of `bands` band
-    * keys, as (idA < idB) distinct pairs. Signatures are computed per-row
-    * and never shuffle — band exchanges and the bucket self-join carry only
-    * `(band, id)`.
+  /** Verify tail shared by the minhash and embedding paths: the bucket pairs
+    * collapse to distinct `(id_a, id_b)` candidates, each side's payload is
+    * re-joined by id (`payload("a")` / `payload("b")` project `id_a` /
+    * `id_b` plus the renamed payload columns `score` reads), and every
+    * candidate is scored exactly once and kept at `score >= threshold`. The
+    * payload never crosses a bucket exchange — only the far smaller
+    * candidate set meets it.
     */
-  def minHashCandidatePairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      numHashes: Int = 128,
-      bands: Int = 16,
-      shingleSize: Int = 5,
-      maxBucketSize: Int = 10000): DataFrame = {
-    require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
-    val banded = cappedBands(
-      nonEmptySigs(df, idCol, textCol, numHashes, shingleSize),
-      bands, numHashes / bands, maxBucketSize)
-    val a = banded.select(col("_band"), col("_id").as("id_a"))
-    val b = banded.select(col("_band"), col("_id").as("id_b"))
-    a.join(b, Seq("_band"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-  }
+  private def verifiedPairs(pairs: DataFrame, payload: String => DataFrame,
+      score: Column, scoreName: String, threshold: Double): DataFrame =
+    pairs.select(col("id_a"), col("id_b")).distinct()
+      .join(payload("a"), Seq("id_a")).join(payload("b"), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), score.as(scoreName))
+      .filter(col(scoreName) >= threshold)
 
   /** Signature-estimated Jaccard: fraction of equal slots (codegen'd
     * VecEqFraction kernel — runs once per candidate pair, where an
@@ -238,23 +227,18 @@ object Dedup {
 
   /** Banding + candidate generation + estimated-Jaccard verify over a
     * normalized `(_id, _sig)` signature frame — the pipeline shared by the
-    * from-text and from-stored-signatures entry points.
+    * from-text and from-stored-signatures entry points. The signature is
+    * dropped BEFORE anything shuffles: band rows are `(_bucket, _id)`.
     */
   private def pairsFromSigFrame(sigs: DataFrame, threshold: Double, bands: Int,
       rowsPerBand: Int, maxBucketSize: Int): DataFrame = {
-    val banded = cappedBands(sigs, bands, rowsPerBand, maxBucketSize)
-    val a = banded.select(col("_band"), col("_id").as("id_a"))
-    val b = banded.select(col("_band"), col("_id").as("id_b"))
-    val candidates = a.join(b, Seq("_band"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    val sigA = sigs.select(col("_id").as("id_a"), col("_sig").as("_sig_a"))
-    val sigB = sigs.select(col("_id").as("id_b"), col("_sig").as("_sig_b"))
-    candidates.join(sigA, Seq("id_a")).join(sigB, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        estJaccard(col("_sig_a"), col("_sig_b")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    val banded = sigs.select(
+      col("_id"),
+      explode(array((0 until bands).map(b =>
+        minhash_band_key(col("_sig"), b, rowsPerBand)): _*)).as("_bucket"))
+    verifiedPairs(bucketPairs(banded, maxBucketSize, "minhash"),
+      s => sigs.select(col("_id").as(s"id_$s"), col("_sig").as(s"_sig_$s")),
+      estJaccard(col("_sig_a"), col("_sig_b")), "est_jaccard", threshold)
   }
 
   /** The ingest-time fingerprint step for [[minHashNearDupPairsOnSignatures]]:
@@ -296,6 +280,11 @@ object Dedup {
     * the shingle-less sentinel are excluded like the text path. Identical
     * results to [[minHashNearDupPairs]] on the same corpus by construction
     * — both run [[pairsFromSigFrame]] on the same signature values.
+    *
+    * The fingerprint table may be a different frame from the corpus: pass
+    * its pairs to [[dropDominated]] / [[keepClusterMinima]] with the corpus
+    * (ids must align); corpus rows without a fingerprint row have no pairs
+    * and always survive.
     */
   def minHashNearDupPairsOnSignatures(
       df: DataFrame,
@@ -324,210 +313,45 @@ object Dedup {
     pairsFromSigFrame(sigs, threshold, bands, numHashes / bands, maxBucketSize)
   }
 
-  /** [[minHashDedup]] over STORED signatures: keeps every `df` row whose id
-    * has no more-senior (smaller-id) near-duplicate, with the pair list
-    * derived from the fingerprint table `sigs` (`sigIdCol`, `sigCol` — as
-    * written by [[minHashSignatures]] at ingest; ids must align with `df`'s
-    * `idCol` values). Same one-pass contract as [[minHashDedup]], zero text
-    * re-hashing: a threshold re-tune re-runs this against the same stored
-    * fingerprints. Rows of `df` without a fingerprint row have no pairs and
-    * always survive.
+  /** One-pass near-dup dedup over any pair producer: keeps every `df` row
+    * unless some pair dominates it (its id is the `id_b`, larger, side).
+    * `pairs` is any `(id_a, id_b)` frame with `id_a < id_b` — the output of
+    * [[minHashNearDupPairs]], [[minHashNearDupPairsOnSignatures]],
+    * [[simHashNearDupPairs]], [[simHashNearDupPairsOnHashes]] or
+    * [[embeddingNearDupPairs]] — and its ids must align with `df`'s `idCol`.
+    * Rows without a pair always survive. One pass is the standard
+    * training-data practice: a chain A~B~C with A!~C keeps both A and C (use
+    * [[keepClusterMinima]] to keep exactly one). The loser list is small
+    * next to the corpus, so AQE broadcasts the anti-join build side.
+    *
+    * {{{
+    * val docs = spark.read.parquet("documents")
+    * val kept = Dedup.dropDominated(docs, "doc_id",
+    *   Dedup.minHashNearDupPairs(docs, "doc_id", "text", threshold = 0.8))
+    * }}}
     */
-  def minHashDedupOnSignatures(
-      df: DataFrame,
-      idCol: String,
-      sigs: DataFrame,
-      sigIdCol: String,
-      sigCol: String,
-      threshold: Double = 0.8,
-      numHashes: Int = 128,
-      bands: Int = 16,
-      maxBucketSize: Int = 10000): DataFrame =
-    dropLosers(df, idCol, minHashNearDupPairsOnSignatures(sigs, sigIdCol, sigCol,
-      threshold, numHashes, bands, maxBucketSize))
-
-  /** One-pass loser drop shared by every near-dup dedup wrapper: a doc
-    * survives unless some pair dominates it (its id is the larger side).
-    * The loser list is small next to the corpus, so AQE broadcasts the
-    * anti-join build side.
-    */
-  private def dropLosers(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+  def dropDominated(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
     val losers = pairs.select(col("id_b").as("_loser")).distinct()
     df.join(losers, df(idCol) === col("_loser"), "left_anti")
   }
 
-  /** Near-dup dedup: drop every document that has a more-senior (smaller id)
-    * near-duplicate. One LSH pass (near-transitive clusters collapse to their
-    * minimum over repeated application; one pass is the standard
-    * training-data practice).
+  /** Cluster-aware near-dup dedup over any pair producer (the same `pairs`
+    * contract as [[dropDominated]]): closes the pair list into connected
+    * components with [[nearDupClusters]] (eager convergence, `iterations` as
+    * its safety budget) and keeps exactly ONE row per TRANSITIVE cluster,
+    * the minimum id. The survivor test is free — cluster labels ARE
+    * component minima, so a doc survives iff its label equals its own id.
+    * Costs the clustering on top of the pairs pass; the pair list, not the
+    * corpus, drives that cost (isolated docs ride through one join).
     */
-  def minHashDedup(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double = 0.8,
-      numHashes: Int = 128,
-      bands: Int = 16,
-      shingleSize: Int = 5,
-      cacheSignatures: Boolean = true): DataFrame =
-    dropLosers(df, idCol, minHashNearDupPairs(df, idCol, textCol, threshold,
-      numHashes, bands, shingleSize, cacheSignatures = cacheSignatures))
-
-  /** One-pass simhash dedup: drop every document with a more-senior
-    * (smaller-id) near-duplicate within `maxHamming` bits — the one-call
-    * wrapper over [[simHashNearDupPairs]], same contract as
-    * [[minHashDedup]] (chains keep every non-dominated doc; route through
-    * [[nearDupClusters]] for transitive collapse).
-    */
-  def simHashDedup(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 10000): DataFrame =
-    dropLosers(df, idCol,
-      simHashNearDupPairs(df, idCol, textCol, maxHamming, maxBucketSize))
-
-  /** One-pass embedding-cosine dedup: drop every vector with a more-senior
-    * (smaller-id) near-duplicate at cosine >= threshold — the one-call
-    * wrapper over [[embeddingNearDupPairs]], same contract as
-    * [[minHashDedup]].
-    */
-  def embeddingDedup(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      threshold: Double = 0.95,
-      planes: Int = 16,
-      tables: Int = 6,
-      maxBucketSize: Int = 10000,
-      cacheVectors: Boolean = true): DataFrame =
-    dropLosers(df, idCol, embeddingNearDupPairs(df, idCol, vecCol, dim, threshold,
-      planes, tables, maxBucketSize, cacheVectors))
-
-  /** Cluster-aware near-dup dedup: keeps exactly ONE document (the minimum
-    * id) per TRANSITIVE near-duplicate cluster. [[minHashDedup]]'s one-pass
-    * contract keeps a doc whenever no direct pair dominates it, so a chain
-    * A~B~C with A!~C keeps both A and C; this variant first closes the pair
-    * list into connected components ([[nearDupClusters]]' min-label
-    * propagation with pointer jumping, eager convergence) and keeps each
-    * component's minimum. Costs the clustering rounds on top of one LSH pass
-    * — the pair list, not the corpus, drives that cost (isolated docs ride
-    * through one join).
-    *
-    * The survivor test is free: cluster labels ARE component minima, so a
-    * doc survives iff its label equals its own id — no extra per-cluster
-    * aggregation.
-    */
-  def minHashDedupTransitive(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double = 0.8,
-      numHashes: Int = 128,
-      bands: Int = 16,
-      shingleSize: Int = 5,
-      maxBucketSize: Int = 10000,
-      cacheSignatures: Boolean = true,
-      iterations: Int = 20): DataFrame =
-    keepClusterMinima(df, idCol,
-      minHashNearDupPairs(df, idCol, textCol, threshold, numHashes, bands,
-        shingleSize, maxBucketSize, cacheSignatures), iterations)
-
-  /** Cluster-aware dedup shared by the transitive wrappers: close the pair
-    * list into connected components and keep each component's minimum. The
-    * survivor test is free — cluster labels ARE component minima, so a doc
-    * survives iff its label equals its own id.
-    */
-  private[ops] def keepClusterMinima(df: DataFrame, idCol: String, pairs: DataFrame,
-      iterations: Int): DataFrame = {
+  def keepClusterMinima(df: DataFrame, idCol: String, pairs: DataFrame,
+      iterations: Int = 20): DataFrame = {
     val survivors = nearDupClusters(df.select(col(idCol)), idCol,
       pairs.select(col("id_a"), col("id_b")), iterations)
       .filter(col(idCol) === col("cluster_id"))
       .select(col(idCol))
     df.join(survivors, Seq(idCol), "left_semi")
   }
-
-  /** [[minHashDedupTransitive]] over STORED signatures: the transitive
-    * counterpart of [[minHashDedupOnSignatures]] — pair list from the
-    * fingerprint table, closed into connected components, one survivor per
-    * component. Rows of `df` without a fingerprint row are isolated and
-    * always survive.
-    */
-  def minHashDedupTransitiveOnSignatures(
-      df: DataFrame,
-      idCol: String,
-      sigs: DataFrame,
-      sigIdCol: String,
-      sigCol: String,
-      threshold: Double = 0.8,
-      numHashes: Int = 128,
-      bands: Int = 16,
-      maxBucketSize: Int = 10000,
-      iterations: Int = 20): DataFrame =
-    keepClusterMinima(df, idCol,
-      minHashNearDupPairsOnSignatures(sigs, sigIdCol, sigCol, threshold,
-        numHashes, bands, maxBucketSize), iterations)
-
-  /** One-pass simhash dedup over PRE-COMPUTED 64-bit fingerprints
-    * (`hashCol` on `df` itself) — [[simHashDedup]] for corpora that store
-    * their simhash at ingest. Rows with a null hash never pair and always
-    * survive.
-    */
-  def simHashDedupOnHashes(
-      df: DataFrame,
-      idCol: String,
-      hashCol: String,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 10000): DataFrame =
-    dropLosers(df, idCol,
-      simHashNearDupPairsOnHashes(df, idCol, hashCol, maxHamming, maxBucketSize))
-
-  /** Transitive counterpart of [[simHashDedupOnHashes]]. */
-  def simHashDedupTransitiveOnHashes(
-      df: DataFrame,
-      idCol: String,
-      hashCol: String,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 10000,
-      iterations: Int = 20): DataFrame =
-    keepClusterMinima(df, idCol,
-      simHashNearDupPairsOnHashes(df, idCol, hashCol, maxHamming, maxBucketSize),
-      iterations)
-
-  /** Cluster-aware simhash dedup: [[simHashNearDupPairs]] closed into
-    * connected components, one survivor (minimum id) per component — the
-    * transitive counterpart of [[simHashDedup]], exactly like
-    * [[minHashDedupTransitive]] vs [[minHashDedup]].
-    */
-  def simHashDedupTransitive(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 10000,
-      iterations: Int = 20): DataFrame =
-    keepClusterMinima(df, idCol,
-      simHashNearDupPairs(df, idCol, textCol, maxHamming, maxBucketSize), iterations)
-
-  /** Cluster-aware embedding dedup: [[embeddingNearDupPairs]] closed into
-    * connected components, one survivor (minimum id) per component.
-    */
-  def embeddingDedupTransitive(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      threshold: Double = 0.95,
-      planes: Int = 16,
-      tables: Int = 6,
-      maxBucketSize: Int = 10000,
-      cacheVectors: Boolean = true,
-      iterations: Int = 20): DataFrame =
-    keepClusterMinima(df, idCol,
-      embeddingNearDupPairs(df, idCol, vecCol, dim, threshold, planes, tables,
-        maxBucketSize, cacheVectors), iterations)
 
   /** Frees a localCheckpoint's blocks NOW instead of waiting for GC-driven
     * cleanup. ONLY for checkpoints that nothing can reference again — a
@@ -541,6 +365,30 @@ object Dedup {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** Edge-count ceiling for the driver-side connected-components fast path
+    * of [[nearDupClusters]] (0 disables it). Near-dup pair lists are tiny
+    * next to their corpus — when the whole list fits comfortably on the
+    * driver, union-find there replaces the per-round join/checkpoint/probe
+    * job cascade of the distributed loop (measured: ~1.3 s of fixed cost per
+    * clustering at bench scale) with ONE collect; past the ceiling the
+    * distributed loop runs exactly as before, so corpus-scale pair lists
+    * never touch the driver. A malformed value falls back to the default
+    * with one stderr line instead of failing the clustering.
+    */
+  private def ccDriverMaxEdges: Int = {
+    val default = 1000000
+    sys.props.get("graft.cc.driver.max.edges")
+      .orElse(sys.env.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES"))
+      .fold(default) { v =>
+        v.trim.toIntOption.getOrElse {
+          System.err.println(s"[graft] nearDupClusters: malformed driver edge cap " +
+            s"'$v' (graft.cc.driver.max.edges / SPARK_GRAFT_CC_DRIVER_MAX_EDGES); " +
+            s"using the default $default")
+          default
+        }
+      }
+  }
 
   /** Transitive near-duplicate clusters from a pair list: each round does one
     * hop of min-label propagation over the edges PLUS a pointer-jumping step
@@ -557,21 +405,14 @@ object Dedup {
     * builder — no Spark jobs run until the caller acts — and runs exactly
     * `iterations` rounds, so the caller owns the chain-length contract
     * (diameter <= ~2^iterations).
+    *
+    * Driver fast path: in converge mode with long ids, a pair list of at
+    * most `graft.cc.driver.max.edges` / `SPARK_GRAFT_CC_DRIVER_MAX_EDGES`
+    * edges (default 1000000; 0 disables the path) is collected once and
+    * clustered by exact union-find on the driver. That path computes the same component
+    * minima and ignores the `iterations` budget — it has no rounds, so a
+    * component of any diameter collapses.
     */
-  /** Edge-count ceiling for the driver-side connected-components fast path
-    * of [[nearDupClusters]] (0 disables it). Near-dup pair lists are tiny
-    * next to their corpus — when the whole list fits comfortably on the
-    * driver, union-find there replaces the per-round join/checkpoint/probe
-    * job cascade of the distributed loop (measured: ~1.3 s of fixed cost per
-    * clustering at bench scale) with ONE collect; past the ceiling the
-    * distributed loop runs exactly as before, so corpus-scale pair lists
-    * never touch the driver.
-    */
-  private def ccDriverMaxEdges: Int =
-    sys.props.get("graft.cc.driver.max.edges")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES"))
-      .map(_.toInt).getOrElse(1000000)
-
   def nearDupClusters(
       df: DataFrame,
       idCol: String,
@@ -594,9 +435,9 @@ object Dedup {
     // the lazy-checkpoint delivery miss (and its measure-on-miss re-run of
     // the banding aggregate, one extra pass per clustering) only remains on
     // the distributed path.
-    if (converge && ccDriverMaxEdges > 0 &&
+    val cap = ccDriverMaxEdges
+    if (converge && cap > 0 &&
         df.schema(idCol).dataType == org.apache.spark.sql.types.LongType) {
-      val cap = ccDriverMaxEdges
       val collected = pairs
         .select(col("id_a").cast("long"), col("id_b").cast("long"))
         // null-endpoint edges are inert in the distributed loop (equi-joins
@@ -878,14 +719,9 @@ object Dedup {
     // minhash's shingle-less docs.
     val hashed = df.select(col(idCol).as("_id"), col(hashCol).as("_sh"))
       .filter(col("_sh").isNotNull)
-    val banded = dropOversizedBuckets(
-      hashed.select(col("_id"), col("_sh"),
-        explode(simHashTripleKeys(col("_sh"), blocks)).as("_bucket")),
-      "_bucket", maxBucketSize, "simhash")
-    val a = banded.select(col("_bucket"), col("_id").as("id_a"), col("_sh").as("_sh_a"))
-    val b = banded.select(col("_bucket"), col("_id").as("id_b"), col("_sh").as("_sh_b"))
-    a.join(b, Seq("_bucket"))
-      .filter(col("id_a") < col("id_b"))
+    val banded = hashed.select(col("_id"), col("_sh"),
+      explode(simHashTripleKeys(col("_sh"), blocks)).as("_bucket"))
+    bucketPairs(banded, maxBucketSize, "simhash", carry = Seq("_sh"))
       .select(col("id_a"), col("id_b"),
         bit_count(col("_sh_a").bitwiseXOR(col("_sh_b"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -956,25 +792,13 @@ object Dedup {
     val rawVecs = df.select(col(idCol).as("_id"), col(vecCol).as("_v"),
       Similarity.norm(col(vecCol)).as("_n"))
     val vecs = if (cacheVectors) rawVecs.localCheckpoint(eager = false) else rawVecs
-    val banded = dropOversizedBuckets(
-      vecs.select(col("_id"),
+    val banded = vecs.select(col("_id"),
         posexplode(hyperplane_buckets(col("_v"), dim, planes, tables)))
-        .select(col("_id"),
-          struct(col("pos").as("t"), col("col").as("b")).as("_bucket")),
-      "_bucket", maxBucketSize, "embedding")
-    val a = banded.select(col("_bucket"), col("_id").as("id_a"))
-    val b = banded.select(col("_bucket"), col("_id").as("id_b"))
-    val candidates = a.join(b, Seq("_bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    val va = vecs.select(col("_id").as("id_a"), col("_v").as("_va"), col("_n").as("_na"))
-    val vb = vecs.select(col("_id").as("id_b"), col("_v").as("_vb"), col("_n").as("_nb"))
+      .select(col("_id"), struct(col("pos").as("t"), col("col").as("b")).as("_bucket"))
     val denom = col("_na") * col("_nb")
-    candidates.join(va, Seq("id_a")).join(vb, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        when(denom > 0, Similarity.dot(col("_va"), col("_vb")) / denom)
-          .otherwise(lit(0.0)).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    verifiedPairs(bucketPairs(banded, maxBucketSize, "embedding"),
+      s => vecs.select(col("_id").as(s"id_$s"), col("_v").as(s"_v$s"), col("_n").as(s"_n$s")),
+      when(denom > 0, Similarity.dot(col("_va"), col("_vb")) / denom).otherwise(lit(0.0)),
+      "cosine", threshold)
   }
 }

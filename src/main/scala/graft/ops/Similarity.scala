@@ -103,7 +103,7 @@ object Similarity {
     * later distinct hashes (the window fills before they are seen; a loud
     * warning is printed when most of the window collapses). For corpora
     * with such extreme template skew, pre-deduplicate the vector column
-    * first — `Dedup.exactByColumns(corpus, Seq(vecCol))` — and train on the
+    * first — `corpus.dropDuplicates(vecCol)` — and train on the
     * result; that pays one distinct-shuffle but only for corpora that need
     * it.
     *
@@ -164,7 +164,7 @@ object Similarity {
         s"collapsed to ${raw.length} distinct usable vectors (of " +
         s"${windowRows.length} collected, ${collected.length} clean) — extreme " +
         s"template duplication or dirty-row crowding; pre-deduplicate/clean the " +
-        s"vector column (Dedup.exactByColumns) for a representative sample")
+        s"vector column (dropDuplicates) for a representative sample")
     // dim by majority vote over the PRE-dedup window (ties -> smaller dim):
     // neither a single junk-length row that wins the hash order nor many
     // DISTINCT junk-length rows outvoting one heavily-duplicated real

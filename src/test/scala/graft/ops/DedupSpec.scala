@@ -130,8 +130,8 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.contains((10L, 11L)) && pairs.contains((11L, 13L)),
       s"near dup missed: $pairs")
     assert(!pairs.exists(p => p._1 == 12L || p._2 == 12L), s"false pair with 12: $pairs")
-    val kept = Dedup.minHashDedup(docs, "doc_id", "text", threshold = 0.5,
-      bands = 32)
+    val kept = Dedup.dropDominated(docs, "doc_id",
+      Dedup.minHashNearDupPairs(docs, "doc_id", "text", threshold = 0.5, bands = 32))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(10L, 12L), s"kept $kept")
   }
@@ -158,7 +158,8 @@ class DedupSpec extends AnyFunSuite {
         "machine learning feature engineering pipelines with embeddings and tokens " +
         "plus quality filtering heuristics for web corpora at massive scale")
     ).toDF("doc_id", "text")
-    val keptSim = Dedup.simHashDedup(docs, "doc_id", "text", maxHamming = 3)
+    val keptSim = Dedup.dropDominated(docs, "doc_id",
+      Dedup.simHashNearDupPairs(docs, "doc_id", "text", maxHamming = 3))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(keptSim == Set(1L, 3L), s"simHashDedup kept $keptSim")
     val dim = 8
@@ -171,8 +172,9 @@ class DedupSpec extends AnyFunSuite {
     val vecs = ((0 until 30).map(i => (i.toLong, unit(i))) ++
       (0 until 3).map(i => (100L + i, unit(i)))) // exact clones -> losers
       .toDF("vec_id", "embedding")
-    val keptEmb = Dedup.embeddingDedup(vecs, "vec_id", "embedding", dim,
-      threshold = 0.99, planes = 6, tables = 8)
+    val keptEmb = Dedup.dropDominated(vecs, "vec_id",
+      Dedup.embeddingNearDupPairs(vecs, "vec_id", "embedding", dim,
+        threshold = 0.99, planes = 6, tables = 8))
       .select($"vec_id").collect().map(_.getLong(0)).toSet
     assert(keptEmb == (0L until 30L).toSet, s"embeddingDedup kept $keptEmb")
   }
@@ -181,7 +183,7 @@ class DedupSpec extends AnyFunSuite {
     // simhash chain: each hop flips 2 fresh bits in different blocks, so
     // adjacent docs sit at Hamming 2 (paired at bound 3) while the chain
     // ends sit at Hamming 8 (never paired directly) — ids ordered so the
-    // one-pass wrapper would keep BOTH ends, the transitive one exactly one
+    // one-pass dropDominated would keep BOTH ends, keepClusterMinima exactly one
     val base = 0x0123456789abcdefL
     val hops = Seq(0L,
       (1L << 1) | (1L << 12),
@@ -211,8 +213,9 @@ class DedupSpec extends AnyFunSuite {
     }
     val vecs = Seq((5L, unit(1)), (6L, unit(1)), (7L, unit(1)),
       (8L, unit(2)), (9L, unit(3))).toDF("vec_id", "embedding")
-    val keptEmb = Dedup.embeddingDedupTransitive(vecs, "vec_id", "embedding", dim,
-      threshold = 0.99, planes = 4, tables = 8)
+    val keptEmb = Dedup.keepClusterMinima(vecs, "vec_id",
+      Dedup.embeddingNearDupPairs(vecs, "vec_id", "embedding", dim,
+        threshold = 0.99, planes = 4, tables = 8))
       .select($"vec_id").collect().map(_.getLong(0)).toSet
     assert(keptEmb == Set(5L, 8L, 9L), s"embedding transitive kept $keptEmb")
   }
@@ -231,10 +234,12 @@ class DedupSpec extends AnyFunSuite {
       .map { case (i, m) => (i, base ^ m) }.toDF("id", "sh")
     // pairs: (10,13),(11,13),(11,14),(12,14) -> one-pass losers {13,14} and
     // 12 survives (its only pair (12,14) has 12 on the senior side)
-    val onePass = Dedup.simHashDedupOnHashes(rows, "id", "sh")
+    val onePass = Dedup.dropDominated(rows, "id",
+      Dedup.simHashNearDupPairsOnHashes(rows, "id", "sh"))
       .select($"id").collect().map(_.getLong(0)).toSet
     assert(onePass == Set(10L, 11L, 12L), s"one-pass on hashes kept $onePass")
-    val transitive = Dedup.simHashDedupTransitiveOnHashes(rows, "id", "sh")
+    val transitive = Dedup.keepClusterMinima(rows, "id",
+      Dedup.simHashNearDupPairsOnHashes(rows, "id", "sh"))
       .select($"id").collect().map(_.getLong(0)).toSet
     assert(transitive == Set(10L), s"transitive on hashes kept $transitive")
     // minhash transitive on stored signatures == text transitive on the
@@ -244,15 +249,16 @@ class DedupSpec extends AnyFunSuite {
     def doc(i: Int): String = pool.slice(6 * i, 6 * i + 60).mkString(" ")
     val docs = ((0 until 8).map(i => (10L + i, doc(i))) ++
       Seq((900L, baseText))).toDF("doc_id", "text")
-    val fromText = Dedup.minHashDedupTransitive(docs, "doc_id", "text",
-      threshold = 0.7, numHashes = 128, bands = 32)
+    val fromText = Dedup.keepClusterMinima(docs, "doc_id",
+      Dedup.minHashNearDupPairs(docs, "doc_id", "text",
+        threshold = 0.7, numHashes = 128, bands = 32))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     val sigDir = java.nio.file.Files.createTempDirectory("graft_tsig_").toString
     Dedup.minHashSignatures(docs, "doc_id", "text", numHashes = 128)
       .write.mode("overwrite").parquet(sigDir)
-    val fromSigs = Dedup.minHashDedupTransitiveOnSignatures(docs, "doc_id",
-      spark.read.parquet(sigDir), "doc_id", "minhash_sig",
-      threshold = 0.7, numHashes = 128, bands = 32)
+    val fromSigs = Dedup.keepClusterMinima(docs, "doc_id",
+      Dedup.minHashNearDupPairsOnSignatures(spark.read.parquet(sigDir), "doc_id",
+        "minhash_sig", threshold = 0.7, numHashes = 128, bands = 32))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(fromSigs == fromText, s"stored-sig transitive diverged: $fromSigs vs $fromText")
     assert(fromSigs == Set(10L, 900L), s"chain must collapse to its minimum: $fromSigs")
@@ -331,6 +337,31 @@ class DedupSpec extends AnyFunSuite {
       s"outside endpoint 2 must not bridge 1 and 3: $fast")
     assert(slow == fast, s"distributed loop diverged: $slow vs $fast")
     assert(overCap == fast, s"over-cap fallback diverged: $overCap vs $fast")
+  }
+
+  test("nearDupClusters: a malformed driver edge cap falls back to the default") {
+    val docs = ((1L to 11L) :+ 99L).toDF("doc_id")
+    val pairs = (1L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def run(): Map[Long, Long] =
+      Dedup.nearDupClusters(docs, "doc_id", pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val prev = sys.props.get("graft.cc.driver.max.edges")
+    val prevErr = System.err
+    val err = new java.io.ByteArrayOutputStream()
+    val (default, malformed) = try {
+      sys.props.remove("graft.cc.driver.max.edges")
+      val d = run()
+      sys.props("graft.cc.driver.max.edges") = "abc"
+      System.setErr(new java.io.PrintStream(err, true))
+      (d, run())
+    } finally {
+      System.setErr(prevErr)
+      prev.fold(sys.props.remove("graft.cc.driver.max.edges"))(v =>
+        sys.props.put("graft.cc.driver.max.edges", v))
+    }
+    assert(default == ((1L to 11L).map(_ -> 1L) :+ (99L -> 99L)).toMap, s"default: $default")
+    assert(malformed == default, s"malformed cap changed the clusters: $malformed")
+    assert(err.toString.contains("'abc'"), s"expected a stderr line naming 'abc': $err")
   }
 
   test("nearDupClusters plan size is O(1) in iterations (lineage truncated, lazy mode)") {
@@ -451,7 +482,8 @@ class DedupSpec extends AnyFunSuite {
         case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
           (s.outputPartitioning.toString, s.child.output.map(_.name))
       }
-      val bandShuffles = shuffles.filter(_._1.contains("_band"))
+      assert(shuffles.size == 2, s"expected 2 shuffle exchanges with AQE off: $shuffles")
+      val bandShuffles = shuffles.filter(_._1.contains("_bucket"))
       assert(bandShuffles.nonEmpty, s"expected band-partitioned exchanges: $shuffles")
       bandShuffles.foreach { case (part, names) =>
         assert(!names.exists(_.contains("_sig")),
@@ -475,6 +507,7 @@ class DedupSpec extends AnyFunSuite {
         case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
           (s.outputPartitioning.toString, s.child.output.map(_.name))
       }
+      assert(shuffles.size == 2, s"expected 2 shuffle exchanges with AQE off: $shuffles")
       val bucketShuffles = shuffles.filter(_._1.contains("_bucket"))
       assert(bucketShuffles.nonEmpty, s"expected bucket-partitioned exchanges: $shuffles")
       bucketShuffles.foreach { case (part, names) =>
@@ -495,6 +528,7 @@ class DedupSpec extends AnyFunSuite {
           (s.outputPartitioning.toString, s.child.output.map(_.name))
       }
       assert(shuffles.nonEmpty, "expected bucket exchanges")
+      assert(shuffles.size == 2, s"expected 2 shuffle exchanges with AQE off: $shuffles")
       shuffles.foreach { case (part, names) =>
         assert(!names.exists(_.contains("text")),
           s"an exchange ships the text column: $part $names")
@@ -608,8 +642,9 @@ class DedupSpec extends AnyFunSuite {
     val docs = (0 until 60).map(i => (100L + i, "boilerplate legal footer " +
       "all rights reserved contact us terms of service privacy policy"))
       .toDF("doc_id", "text")
-    val kept = Dedup.minHashDedupTransitive(docs, "doc_id", "text",
-      threshold = 0.8, maxBucketSize = 50).count()
+    val kept = Dedup.keepClusterMinima(docs, "doc_id",
+      Dedup.minHashNearDupPairs(docs, "doc_id", "text",
+        threshold = 0.8, maxBucketSize = 50)).count()
     assert(kept == 60L, "all-over-cap buckets emit no pairs -> everything survives")
     val s = awaitCapStats("minhash")
     // 60 identical texts x 16 bands, every band bucket (60 rows) over cap 50
@@ -783,18 +818,20 @@ class DedupSpec extends AnyFunSuite {
     val plan = onSigs.queryExecution.executedPlan.toString
     assert(!plan.contains("minhash_signature") && !plan.toLowerCase.contains("shingle"),
       s"stored-signature plan re-hashes text:\n$plan")
-    // the dedup wrapper keeps the same survivors as the text path, and a
+    // dropDominated keeps the same survivors as the text path, and a
     // corpus row WITHOUT a fingerprint row always survives
-    val keptText = Dedup.minHashDedup(docs, "doc_id", "text", threshold = 0.5,
-      bands = 32).select($"doc_id").collect().map(_.getLong(0)).toSet
-    val keptSigs = Dedup.minHashDedupOnSignatures(
-      docs, "doc_id", stored, "doc_id", "minhash_sig", threshold = 0.5, bands = 32)
+    val keptText = Dedup.dropDominated(docs, "doc_id",
+      Dedup.minHashNearDupPairs(docs, "doc_id", "text", threshold = 0.5, bands = 32))
+      .select($"doc_id").collect().map(_.getLong(0)).toSet
+    val keptSigs = Dedup.dropDominated(docs, "doc_id",
+      Dedup.minHashNearDupPairsOnSignatures(stored, "doc_id", "minhash_sig",
+        threshold = 0.5, bands = 32))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(keptSigs == keptText, s"dedup wrapper diverged: $keptSigs vs $keptText")
     val extra = Seq((99L, "row with no fingerprint")).toDF("doc_id", "text")
-    val keptExtra = Dedup.minHashDedupOnSignatures(
-      docs.union(extra), "doc_id", stored, "doc_id", "minhash_sig",
-      threshold = 0.5, bands = 32)
+    val keptExtra = Dedup.dropDominated(docs.union(extra), "doc_id",
+      Dedup.minHashNearDupPairsOnSignatures(stored, "doc_id", "minhash_sig",
+        threshold = 0.5, bands = 32))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(keptExtra == keptText + 99L,
       s"fingerprint-less rows must survive: $keptExtra")
@@ -839,8 +876,9 @@ class DedupSpec extends AnyFunSuite {
     assert(!pairs.contains((10L, 17L)), s"chain ends must NOT pair directly: $pairs")
     // one-pass dedup keeps a doc whenever no DIRECT pair dominates it;
     // transitive dedup must collapse the whole chain to its minimum
-    val kept = Dedup.minHashDedupTransitive(docs, "doc_id", "text", threshold = 0.7,
-      numHashes = 128, bands = 32)
+    val kept = Dedup.keepClusterMinima(docs, "doc_id",
+      Dedup.minHashNearDupPairs(docs, "doc_id", "text", threshold = 0.7,
+        numHashes = 128, bands = 32))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(kept.contains(10L), s"chain minimum must survive: $kept")
     assert((11L until 18L).forall(i => !kept.contains(i)),
